@@ -25,9 +25,12 @@ Scale notes (100 TB design, SURVEY.md §7 step 6):
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
 
 #: confs that are runtime-settable and REQUIRED for correctness.
 RUNTIME_CONFS: dict[str, str] = {
@@ -62,18 +65,27 @@ BUILD_CONFS: dict[str, str] = {
 }
 
 
+#: confs already reported as unsettable — every loader calls
+#: ``ensure_runtime_confs``, so each key is logged once per process.
+_unsettable: set[str] = set()
+
+
 def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
     """Idempotently apply required runtime confs to an existing session.
 
     Called by every loader so the engine works on sessions it did not
-    create (e.g. the verification driver's).
+    create (e.g. the verification driver's).  A conf this build does
+    not recognize or cannot set at runtime is logged once per key and
+    skipped; the read that needs it surfaces the failure.
     """
     for k, v in RUNTIME_CONFS.items():
         try:
             if spark.conf.get(k, None) != v:
                 spark.conf.set(k, v)
         except Exception:
-            pass  # conf not recognized/settable on this build — reads will surface it
+            if k not in _unsettable:
+                _unsettable.add(k)
+                log.warning("cannot set runtime conf %s=%s", k, v, exc_info=True)
     return spark
 
 

@@ -70,6 +70,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.graph import connected_components
+from ..sources.sinks import to_foreach_batch
+from .pair_index import read_or_none
 
 
 def merge_pairs_into_clusters(
@@ -181,13 +183,8 @@ def _manifest_before(
     strictly older than ``batch_id`` (any, when None).  Returns None if
     no manifest exists yet.  The collect is bounded by the bucket
     count — manifest traffic, not data traffic."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        manis = spark.read.parquet(f"{out_dir}/clusters_manifest")
-    except AnalysisException as e:
-        if e.getCondition() != "PATH_NOT_FOUND":
-            raise
+    manis = read_or_none(spark, f"{out_dir}/clusters_manifest")
+    if manis is None:
         return None
     if batch_id is not None:
         manis = manis.filter(F.col("batch_id") < batch_id)
@@ -307,13 +304,8 @@ def _snapshot_before(
     """Newest snapshot strictly older than ``batch_id`` (None if the
     store doesn't exist yet).  Partition pruning makes the data read
     touch only the chosen snapshot."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        snaps = spark.read.parquet(f"{out_dir}/clusters")
-    except AnalysisException as e:
-        if e.getCondition() != "PATH_NOT_FOUND":
-            raise
+    snaps = read_or_none(spark, f"{out_dir}/clusters")
+    if snaps is None:
         return None
     newest = (
         snaps.filter(F.col("batch_id") < batch_id)
@@ -400,12 +392,7 @@ def maintain_cluster_index(
             n_buckets=n_buckets,
         )
 
-    return (
-        stream.writeStream.foreachBatch(land)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return to_foreach_batch(stream, land, checkpoint_dir)
 
 
 def lookup_components(

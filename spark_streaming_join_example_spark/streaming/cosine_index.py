@@ -12,29 +12,25 @@ of the near-dup index family, completing it across modalities —
   ``operators/similarity.ann_pairs_above`` (embedding-cosine near-dup,
   e.g. semantic dedup of a training corpus).
 
-Same maintenance discipline as all three siblings: the scheme
-(threshold, dim, n_planes, bands, id/vec cols) is FROZEN per index via
-the shared ``_scheme`` manifest — bucket values must stay comparable
-across every batch ever written, and the hyperplanes are a
-deterministic function of (dim, n_planes, seed 42), so a parameter
-change is a versioned rebuild, never an in-place upsert.  Unlike the
-batch ann path, the index does NOT auto-scale bits with corpus size:
-a growing stream would silently re-bucket new batches incomparably.
-Size ``n_planes``/``bands`` for the corpus you expect (defaults: 64/8
-→ 8-bit buckets, per-pair recall ≈ 0.99 at cos 0.95, ≈ 0.93 at 0.9).
+It runs the shared per-batch protocol (streaming/pair_index.py).
+Scheme: threshold, dim, n_planes, bands, id/vec columns — the
+hyperplanes are a deterministic function of (dim, n_planes, seed 42).
+Unlike the batch ann path, the index does NOT auto-scale bits with
+corpus size: a growing stream would silently re-bucket new batches
+incomparably.  Size ``n_planes``/``bands`` for the corpus you expect
+(defaults: 64/8 → 8-bit buckets, per-pair recall ≈ 0.99 at cos 0.95,
+≈ 0.93 at 0.9).
 
-Per micro-batch, exactly-once via per-batch_id idempotent overwrites:
+Per batch N:
 
 1. vectors land under ``vecs/batch_id=N`` (the verify needs them —
    like the Jaccard twins' toks store, this is the heavy side) and
    banded bucket rows under ``bands/batch_id=N``;
 2. candidates = NEW banded rows ⋈ accumulated banded rows (batches
-   ≤ N) on (band, bucket) — a pair whose later vector arrives in
-   batch N is discovered in batch N and never again;
+   ≤ N) on (band, bucket);
 3. EXACT cosine verify (JVM higher-order functions — zip_with dot +
-   sqrt norms, no Python on the maintenance path) lands pairs with
-   cos ≥ threshold under ``pairs/batch_id=N``, filtered to pairs
-   touching a batch-N vector (idempotent under retry races).
+   sqrt norms, no Python on the maintenance path) keeps pairs with
+   cos ≥ threshold.
 
 Precision is exact (the verify is the true cosine); recall equals the
 band scheme's collision probability 1 − (1 − s^bits)^bands, the same
@@ -43,15 +39,11 @@ tests/test_cosine_index.py: streamed pairs == one-shot drain ==
 ``ann_pairs_above`` (same frozen scheme) on the drained corpus, plus
 restart idempotence, scheme-mismatch refusal, and read-only lookup.
 
-Precondition shared with all siblings (write-once corpus): vector ids
-are unique across the whole stream — screen incoming shards with
-``lookup_near_duplicates`` before admission.
-
 At 100 TB: per-batch work is one signature pass (JVM bit expressions)
 plus the (band, bucket) equi-join against the accumulated index —
 fixed-width join keys, cost tracks true collisions; AQE skew-join
 splits hot buckets (the join-shaped path, unlike the batch kernel's
-opaque groups which salt instead).  ``neardup_index.compact_pairs``
+opaque groups which salt instead).  ``pair_index.compact_pairs``
 consolidates the pairs output (shared layout; score column cos_sim).
 """
 
@@ -61,7 +53,14 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.similarity import as_double_array, lsh_signature
-from .neardup_index import _verify_or_freeze_scheme, read_scheme
+from .pair_index import (
+    lookup_bound,
+    maintain_pair_index,
+    ordered_pairs,
+    read_pairs,
+    read_scheme,
+    read_upto,
+)
 
 
 def _banded(
@@ -150,114 +149,49 @@ def maintain_cosine_index(
         "vec_col": vec_col,
     }
 
-    def land(batch_df: DataFrame, batch_id: int) -> None:
+    def land(batch_df: DataFrame, batch_id: int):
         spark = batch_df.sparkSession
-        _verify_or_freeze_scheme(spark, out_dir, scheme)
-
-        vecs = batch_df.select(
+        batch_df.select(
             F.col(id_col), as_double_array(vec_col).alias("vec")
-        )
-        # 1. land this batch's index rows FIRST (idempotent
-        # overwrite), then re-read from disk: the joins below consume
-        # one consistent on-disk relation
-        vecs.write.mode("overwrite").parquet(
-            f"{out_dir}/vecs/batch_id={batch_id}"
-        )
-        landed_vecs = (
-            spark.read.parquet(f"{out_dir}/vecs")
-            .filter(F.col("batch_id") == batch_id)
-            .select(id_col, "vec")
-        )
-        _banded(landed_vecs, id_col, n_planes, bands, dim).write.mode(
-            "overwrite"
-        ).parquet(f"{out_dir}/bands/batch_id={batch_id}")
+        ).write.mode("overwrite").parquet(f"{out_dir}/vecs/batch_id={batch_id}")
+        all_vecs, new_vecs = read_upto(spark, out_dir, "vecs", batch_id)
+        _banded(
+            new_vecs.select(id_col, "vec"), id_col, n_planes, bands, dim
+        ).write.mode("overwrite").parquet(f"{out_dir}/bands/batch_id={batch_id}")
 
-        # 2. candidates: new rows vs the accumulated index (≤ this
-        # batch — a RETRIED batch must not see successors' rows)
-        all_bands = spark.read.parquet(f"{out_dir}/bands").filter(
-            F.col("batch_id") <= batch_id
-        )
-        new_bands = all_bands.filter(F.col("batch_id") == batch_id)
-        cand = (
-            new_bands.select(F.col(id_col).alias("a_id"), "band", "bucket")
-            .join(
-                all_bands.select(
-                    F.col(id_col).alias("b_id"), "band", "bucket"
-                ),
+        all_bands, new_bands = read_upto(spark, out_dir, "bands", batch_id)
+        cand = ordered_pairs(
+            new_bands.select(F.col(id_col).alias("a_id"), "band", "bucket").join(
+                all_bands.select(F.col(id_col).alias("b_id"), "band", "bucket"),
                 ["band", "bucket"],
-            )
-            .filter(F.col("a_id") != F.col("b_id"))
-            .select(
-                F.least("a_id", "b_id").alias("a_id"),
-                F.greatest("a_id", "b_id").alias("b_id"),
-            )
-            .distinct()
+            ),
+            "a_id",
+            "b_id",
         )
-
-        # 3. exact cosine verify against the accumulated vector store
-        all_vecs = spark.read.parquet(f"{out_dir}/vecs").filter(
-            F.col("batch_id") <= batch_id
-        )
-        va = all_vecs.select(
-            F.col(id_col).alias("a_id"), F.col("vec").alias("_va")
-        )
-        vb = all_vecs.select(
-            F.col(id_col).alias("b_id"), F.col("vec").alias("_vb")
-        )
+        # exact cosine verify against the accumulated vector store
+        va = all_vecs.select(F.col(id_col).alias("a_id"), F.col("vec").alias("_va"))
+        vb = all_vecs.select(F.col(id_col).alias("b_id"), F.col("vec").alias("_vb"))
         verified = (
             cand.join(va, "a_id")
             .join(vb, "b_id")
             .select(
                 "a_id",
                 "b_id",
-                F.round(_cos(F.col("_va"), F.col("_vb")), 6).alias(
-                    "cos_sim"
-                ),
+                F.round(_cos(F.col("_va"), F.col("_vb")), 6).alias("cos_sim"),
             )
             .filter(F.col("cos_sim") >= threshold)
         )
-        new_ids = new_bands.select(F.col(id_col).alias("_nid")).distinct()
-        verified = verified.join(
-            new_ids,
-            (F.col("a_id") == F.col("_nid"))
-            | (F.col("b_id") == F.col("_nid")),
-            "left_semi",
-        )
-        verified.write.mode("overwrite").parquet(
-            f"{out_dir}/pairs/batch_id={batch_id}"
-        )
+        return verified, new_bands
 
-        if maintain_clusters:
-            from .cluster_index import update_cluster_snapshot
-
-            landed = spark.read.parquet(
-                f"{out_dir}/pairs/batch_id={batch_id}"
-            )
-            update_cluster_snapshot(
-                spark,
-                out_dir,
-                landed,
-                batch_id,
-                n_buckets=cluster_buckets,
-            )
-
-    return (
-        stream.writeStream.foreachBatch(land)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return maintain_pair_index(
+        stream, out_dir, checkpoint_dir, scheme, land,
+        maintain_clusters, cluster_buckets,
     )
 
 
 def cosine_pairs(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The accumulated verified near-dup pairs (a_id, b_id, cos_sim).
-    Each pair is claimed by exactly one batch; the dropDuplicates is
-    the same belt-and-braces as the siblings' readers."""
-    return (
-        spark.read.parquet(f"{out_dir}/pairs")
-        .select("a_id", "b_id", "cos_sim")
-        .dropDuplicates(["a_id", "b_id"])
-    )
+    """The accumulated verified near-dup pairs (a_id, b_id, cos_sim)."""
+    return read_pairs(spark, out_dir, "cos_sim")
 
 
 def lookup_near_duplicates(
@@ -277,14 +211,10 @@ def lookup_near_duplicates(
     recall is the scheme's collision probability at the pair's true
     similarity."""
     m = read_scheme(spark, out_dir, "cosine_lsh")
-    t_index = float(m["threshold"])
-    t = t_index if threshold is None else float(threshold)
-    if t < t_index:
-        raise ValueError(
-            f"lookup threshold {t} is below the index's frozen threshold "
-            f"{t_index}: the band scheme's recall was sized for the frozen "
-            "threshold (rebuild the index for a looser one)"
-        )
+    t = lookup_bound(
+        m, "threshold", threshold,
+        "the band scheme's recall was sized for the frozen threshold",
+    )
     dim, n_planes, bands = (
         int(m["dim"]), int(m["n_planes"]), int(m["bands"]),
     )

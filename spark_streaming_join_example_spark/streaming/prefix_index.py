@@ -1,14 +1,13 @@
 """Streaming EXACT near-duplicate ingestion (S8 + X1/X2): the lossless
-twin of the MinHash signature index (streaming/neardup_index.py).
+twin of the MinHash signature index (streaming/neardup_index.py), on
+the same per-batch protocol (streaming/pair_index.py).
 
-Same maintenance shape — per-batch_id idempotent overwrites, new batch
-joined against the accumulated index, each pair claimed exactly once by
-the batch its LATER document arrives in — but the blocking relation is
-the PREFIX-FILTER one (operators/dedup.prefix_rows), so the emitted
-pairs are provably COMPLETE at the threshold, not complete-minus-an-ε:
-this is the index to maintain when dedup must be exact (contamination
-control, benchmark-leak audits) and re-running the batch join per
-arrival is unaffordable.
+The blocking relation is the PREFIX-FILTER one
+(operators/dedup.prefix_rows), so the emitted pairs are provably
+COMPLETE at the threshold, not complete-minus-an-ε: this is the index
+to maintain when dedup must be exact (contamination control,
+benchmark-leak audits) and re-running the batch join per arrival is
+unaffordable.
 
 The one design constraint an incremental prefix index adds: the prefix
 of a document must NEVER change as other documents arrive, or old
@@ -20,11 +19,10 @@ write-once.  The pigeonhole losslessness lemma holds for ANY fixed
 global order (it never inspects which tokens are kept, only how many);
 the frequency order is purely a pruning heuristic, and the hash order
 prunes like a random order — weaker, still sub-quadratic (measured in
-tests; the hypothesis property drives both orders).  The scheme
-(threshold, shingle, order) is FROZEN per index via the same manifest
-mechanism as the MinHash index.
+tests; the hypothesis property drives both orders).  Scheme:
+threshold, shingle, order, id/text columns.
 
-Per micro-batch:
+Per batch N:
 
 1. shingle → token sets land under ``toks/batch_id=N``; frozen-order
    prefix rows (id, tok, n) land under ``prefix/batch_id=N``;
@@ -32,23 +30,16 @@ Per micro-batch:
    ≤ N) on the prefix token with the size prefilter
    (operators/dedup.prefix_candidate_join) — lossless: both sides'
    prefixes were built under the same frozen order;
-3. exact-Jaccard verify (the shared operators/dedup code path) lands
-   pairs under ``pairs/batch_id=N``, filtered to pairs touching a
-   batch-N document (idempotence under retry races, as in the MinHash
-   index).
+3. exact-Jaccard verify (the shared operators/dedup code path).
 
 Equivalence pinned by tests/test_prefix_index.py: streamed pairs ==
 the batch prefix join (hash order) == the batch prefix join (df order)
 == brute force, on the drained corpus.
 
-Beyond maintenance, the module completes the index API:
-``exact_pairs`` (read the accumulated output),
-``neardup_index.compact_pairs`` (OPTIMIZE — shared layout), and
-``lookup_near_duplicates`` (read-only dedup-check-before-ingest: flag
-query documents against the index without writing anything; the unit
-scheme comes from the frozen manifest, and only thresholds ≥ the
-frozen one are accepted — the stored prefixes are exactly long enough
-for the frozen bound).
+``lookup_near_duplicates`` is the read-only dedup-check-before-ingest:
+it flags query documents against the index without writing anything;
+only thresholds ≥ the frozen one are accepted — the stored prefixes
+are exactly long enough for the frozen bound.
 
 At 100 TB: per-batch work is one shingle+window pass over the batch
 (per-document window, no global pass — that is what the frozen order
@@ -65,13 +56,19 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.dedup import (
-    distinct_tokens,
     exact_jaccard_verify,
     prefix_candidate_join,
     prefix_rows,
-    shingles,
 )
-from .neardup_index import _verify_or_freeze_scheme
+from .pair_index import (
+    _cross_verify,
+    lookup_bound,
+    maintain_pair_index,
+    read_pairs,
+    read_scheme,
+    read_upto,
+    text_unit,
+)
 
 
 def maintain_prefix_index(
@@ -104,72 +101,26 @@ def maintain_prefix_index(
         "text_col": text_col,
     }
 
-    def land(batch_df: DataFrame, batch_id: int) -> None:
+    def land(batch_df: DataFrame, batch_id: int):
         spark = batch_df.sparkSession
-        _verify_or_freeze_scheme(spark, out_dir, scheme)
-        unit = (
-            shingles(text_col, n=shingle)
-            if shingle > 1
-            else distinct_tokens(text_col)
+        toks = batch_df.select(
+            F.col(id_col), text_unit(text_col, shingle).alias("toks")
         )
-        toks = batch_df.select(F.col(id_col), unit.alias("toks"))
         prefix = prefix_rows(toks, id_col, threshold, order="hash")
-
         toks.write.mode("overwrite").parquet(
             f"{out_dir}/toks/batch_id={batch_id}"
         )
         prefix.write.mode("overwrite").parquet(
             f"{out_dir}/prefix/batch_id={batch_id}"
         )
+        all_prefix, new_prefix = read_upto(spark, out_dir, "prefix", batch_id)
+        cand = prefix_candidate_join(new_prefix, all_prefix, id_col, threshold)
+        all_toks, _ = read_upto(spark, out_dir, "toks", batch_id)
+        return exact_jaccard_verify(cand, all_toks, id_col, threshold), new_prefix
 
-        # candidates: this batch's prefixes vs the accumulated index
-        # (≤ this batch — a RETRIED batch must not see its successors'
-        # rows, or it would claim their pairs)
-        all_prefix = spark.read.parquet(f"{out_dir}/prefix").filter(
-            F.col("batch_id") <= batch_id
-        )
-        new_prefix = all_prefix.filter(F.col("batch_id") == batch_id)
-        cand = prefix_candidate_join(
-            new_prefix, all_prefix, id_col, threshold
-        )
-
-        all_toks = spark.read.parquet(f"{out_dir}/toks").filter(
-            F.col("batch_id") <= batch_id
-        )
-        verified = exact_jaccard_verify(cand, all_toks, id_col, threshold)
-        new_ids = new_prefix.select(F.col(id_col).alias("_nid")).distinct()
-        verified = verified.join(
-            new_ids,
-            (F.col("a_id") == F.col("_nid"))
-            | (F.col("b_id") == F.col("_nid")),
-            "left_semi",
-        )
-        verified.write.mode("overwrite").parquet(
-            f"{out_dir}/pairs/batch_id={batch_id}"
-        )
-
-        if maintain_clusters:
-            # fold the LANDED pairs (read back — cheaper than
-            # re-evaluating the verify join, and exactly what the
-            # retry discipline replays) into the cluster snapshots
-            from .cluster_index import update_cluster_snapshot
-
-            landed = spark.read.parquet(
-                f"{out_dir}/pairs/batch_id={batch_id}"
-            )
-            update_cluster_snapshot(
-                spark,
-                out_dir,
-                landed,
-                batch_id,
-                n_buckets=cluster_buckets,
-            )
-
-    return (
-        stream.writeStream.foreachBatch(land)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return maintain_pair_index(
+        stream, out_dir, checkpoint_dir, scheme, land,
+        maintain_clusters, cluster_buckets,
     )
 
 
@@ -199,29 +150,17 @@ def lookup_near_duplicates(
     per-document window pass over the query batch, scalar-token
     equi-join against the accumulated prefix store, exact verify
     against the toks store."""
-    from .neardup_index import _cross_verify, read_scheme
-
     manifest = read_scheme(spark, out_dir, "prefix")
-    t_index = float(manifest["threshold"])
-    t = t_index if threshold is None else float(threshold)
-    if t < t_index:
-        raise ValueError(
-            f"lookup threshold {t} is below the index's frozen threshold "
-            f"{t_index}: stored prefixes are too short for a looser query "
-            "(rebuild the index at the lower threshold instead)"
-        )
-    shingle = int(manifest["shingle"])
-    unit = (
-        shingles(text_col, n=shingle)
-        if shingle > 1
-        else distinct_tokens(text_col)
+    t = lookup_bound(
+        manifest, "threshold", threshold,
+        "stored prefixes are too short for a looser query",
     )
-    q_toks = docs.select(F.col(id_col), unit.alias("toks")).localCheckpoint(
-        eager=False
-    )
+    q_toks = docs.select(
+        F.col(id_col), text_unit(text_col, int(manifest["shingle"])).alias("toks")
+    ).localCheckpoint(eager=False)
     q_prefix = prefix_rows(q_toks, id_col, t, order="hash")
     # index stores carry the BUILD-time id column name — take it from
-    # the frozen manifest (r10 advisor fix: was hardcoded 'doc_id')
+    # the frozen manifest
     idx_id = manifest.get("id_col") or "doc_id"
     idx_prefix = spark.read.parquet(f"{out_dir}/prefix").withColumnRenamed(
         idx_id, "doc_id"
@@ -247,11 +186,5 @@ def lookup_near_duplicates(
 
 
 def exact_pairs(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The accumulated verified exact near-dup pairs (a_id, b_id, jac);
-    same claim-once + defensive-distinct contract as the MinHash
-    index's reader."""
-    return (
-        spark.read.parquet(f"{out_dir}/pairs")
-        .select("a_id", "b_id", "jac")
-        .dropDuplicates(["a_id", "b_id"])
-    )
+    """The accumulated verified exact near-dup pairs (a_id, b_id, jac)."""
+    return read_pairs(spark, out_dir, "jac")

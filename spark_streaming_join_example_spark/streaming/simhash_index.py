@@ -8,12 +8,8 @@ member of the text-index family, completing the trio —
 - SimHash index (this module): provably complete HAMMING blocking
   over 63-bit fingerprints, exact bit_count verify.
 
-Same maintenance discipline as both siblings: the scheme (n_bits,
-max_hamming) is FROZEN per index via the shared ``_scheme`` manifest
-(``neardup_index._verify_or_freeze_scheme``) — chunk values must stay
-comparable across every batch ever written, so a parameter change is a
-versioned rebuild, never an in-place upsert.  Per micro-batch,
-exactly-once via per-batch_id idempotent overwrites:
+It runs the shared per-batch protocol (streaming/pair_index.py).
+Scheme: n_bits, max_hamming, shingle, id/text columns.  Per batch N:
 
 1. fingerprints land under ``fps/batch_id=N`` — and that is the WHOLE
    per-document footprint.  Unlike the Jaccard indexes, which must
@@ -25,12 +21,8 @@ exactly-once via per-batch_id idempotent overwrites:
    when the corpus is 100 TB and the toks store of the Jaccard twins
    is unaffordable.
 2. candidates = chunks(NEW fps) ⋈ chunks(accumulated fps ≤ N) on
-   (chunk_idx, chunk_value) — a pair whose later document arrives in
-   batch N is discovered in batch N and never again, so the union of
-   per-batch pair files is exactly the batch pipeline's output;
-3. exact Hamming verify lands pairs under ``pairs/batch_id=N``,
-   filtered to pairs touching a batch-N document (idempotence under
-   retry races, as in both siblings).
+   (chunk_idx, chunk_value); the chunk rows carry the fingerprints,
+   so the exact Hamming verify falls out of the same join.
 
 Equivalence to the batch pipeline is EXACT, not statistical — same
 fingerprints (xxhash64 bit sums), same pigeonhole chunk layout (the
@@ -40,17 +32,6 @@ operators/dedup.simhash_near_duplicates on the drained corpus, plus
 restart idempotence, scheme-mismatch refusal, and lookup == brute
 force (pigeonhole blocking is lossless, so the read-only lookup has
 precision AND recall 1.0 at the frozen radius).
-
-Precondition shared with both siblings (write-once corpus): doc ids
-are UNIQUE across the whole stream — each document is ingested exactly
-once.  Re-ingesting an existing id in a later batch re-discovers its
-old pairs and lands them under a second batch_id partition: readers
-still return the correct pair set (the belt-and-braces dropDuplicates
-collapses the copies), but the "each pair claimed by exactly one
-batch" invariant the tests pin no longer holds, and the re-ingested
-document's fingerprint is stored twice.  Screen incoming shards with
-``lookup_near_duplicates`` (or an id anti-join) before admission —
-demo.py §7 shows the loop.
 
 Scale contract (measured — SCALE.md §Round-10): the candidate join's
 cost tracks CHUNK COLLISIONS, so the UNIT the fingerprint summarizes
@@ -65,7 +46,7 @@ prefix join (r9) — and collapses the measured candidate rate to
 and the unit width freezes into the scheme manifest like every other
 parameter.  Maintenance work per batch is one fingerprint pass (JVM
 bit expressions, no Python) plus the chunk equi-join (AQE skew-split
-applies).  File-count hygiene: ``neardup_index.compact_pairs``
+applies).  File-count hygiene: ``pair_index.compact_pairs``
 consolidates the pairs output (shared layout); the fps store compacts
 the same way on a schedule (union of CLOSED batches to a versioned
 dir).
@@ -76,24 +57,16 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.dedup import (
-    distinct_tokens,
-    shingles,
-    simhash63,
-    simhash_chunks,
+from ..operators.dedup import simhash63, simhash_chunks
+from .pair_index import (
+    lookup_bound,
+    maintain_pair_index,
+    ordered_pairs,
+    read_pairs,
+    read_scheme,
+    read_upto,
+    text_unit,
 )
-from .neardup_index import _verify_or_freeze_scheme, read_scheme
-
-
-def _unit(text_col: str, shingle: int):
-    """The fingerprinted unit: word n-gram shingles when shingle > 1
-    (the scale-safe form — see simhash_near_duplicates), else distinct
-    tokens (the registered batch queries' semantics)."""
-    return (
-        shingles(text_col, n=shingle)
-        if shingle > 1
-        else distinct_tokens(text_col)
-    )
 
 
 def _chunk_rows(
@@ -110,6 +83,10 @@ def _chunk_rows(
             "c"
         ),
     ).select(id_out, fp_out, "c.ci", "c.cv")
+
+
+def _hamming(a_fp: str, b_fp: str):
+    return F.bit_count(F.col(a_fp).bitwiseXOR(F.col(b_fp))).cast("int")
 
 
 def maintain_simhash_index(
@@ -134,9 +111,9 @@ def maintain_simhash_index(
 
     ``maintain_clusters=True`` folds each batch's verified pair delta
     into incrementally-maintained duplicate CLUSTER ids under
-    ``out_dir/clusters`` (streaming/cluster_index.py) — same option as
-    both Jaccard siblings.  ``cluster_buckets`` selects the
-    partitioned touched-bucket snapshot layout (r11; read back via
+    ``out_dir/clusters`` (streaming/cluster_index.py).
+    ``cluster_buckets`` selects the partitioned touched-bucket
+    snapshot layout (r11; read back via
     ``latest_clusters(..., partitioned=True)``)."""
 
     scheme = {
@@ -148,100 +125,34 @@ def maintain_simhash_index(
         "text_col": text_col,
     }
 
-    def land(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        _verify_or_freeze_scheme(spark, out_dir, scheme)
-
-        # 1. land this batch's fingerprints FIRST (idempotent
-        # overwrite), then re-read from disk: the candidate join below
-        # consumes one consistent on-disk relation
+    def land(batch_df: DataFrame, batch_id: int):
         batch_df.select(
             F.col(id_col),
-            simhash63(_unit(text_col, shingle), n_bits=n_bits).alias("fp"),
+            simhash63(text_unit(text_col, shingle), n_bits=n_bits).alias("fp"),
         ).write.mode("overwrite").parquet(f"{out_dir}/fps/batch_id={batch_id}")
-
-        # 2. candidates + verify in one pass: the chunk rows CARRY the
-        # fingerprints, so hamming falls out of the equi-join without a
-        # second lookup.  ≤ batch_id: a RETRIED batch must not see rows
-        # from batches that ran after its first attempt.
-        all_fps = (
-            spark.read.parquet(f"{out_dir}/fps")
-            .filter(F.col("batch_id") <= batch_id)
-            .select(F.col(id_col), "fp")
+        all_fps, new_fps = read_upto(
+            batch_df.sparkSession, out_dir, "fps", batch_id
         )
-        new_fps = (
-            spark.read.parquet(f"{out_dir}/fps")
-            .filter(F.col("batch_id") == batch_id)
-            .select(F.col(id_col), "fp")
-        )
+        # candidates + verify in one pass: the chunk rows CARRY the
+        # fingerprints, so hamming falls out of the equi-join
         a = _chunk_rows(new_fps, "_aid", "_afp", n_bits, max_hamming)
         b = _chunk_rows(all_fps, "_bid", "_bfp", n_bits, max_hamming)
-        verified = (
+        near = (
             a.join(b, ["ci", "cv"])
-            .filter(F.col("_aid") != F.col("_bid"))
-            # hamming is symmetric — compute before id normalization
-            .withColumn(
-                "hamming",
-                F.bit_count(F.col("_afp").bitwiseXOR(F.col("_bfp"))).cast(
-                    "int"
-                ),
-            )
+            .withColumn("hamming", _hamming("_afp", "_bfp"))
             .filter(F.col("hamming") <= max_hamming)
-            .select(
-                F.least("_aid", "_bid").alias("a_id"),
-                F.greatest("_aid", "_bid").alias("b_id"),
-                "hamming",
-            )
-            .distinct()
         )
+        return ordered_pairs(near, "_aid", "_bid", "hamming"), new_fps
 
-        # 3. keep only pairs touching a batch-N document: a pair with
-        # both sides in EARLIER batches was already claimed when its
-        # later doc arrived (only reachable when a retried batch races
-        # a successor's files — the filter keeps the rewrite idempotent)
-        new_ids = new_fps.select(F.col(id_col).alias("_nid")).distinct()
-        verified = verified.join(
-            new_ids,
-            (F.col("a_id") == F.col("_nid"))
-            | (F.col("b_id") == F.col("_nid")),
-            "left_semi",
-        )
-        verified.write.mode("overwrite").parquet(
-            f"{out_dir}/pairs/batch_id={batch_id}"
-        )
-
-        if maintain_clusters:
-            from .cluster_index import update_cluster_snapshot
-
-            landed = spark.read.parquet(
-                f"{out_dir}/pairs/batch_id={batch_id}"
-            )
-            update_cluster_snapshot(
-                spark,
-                out_dir,
-                landed,
-                batch_id,
-                n_buckets=cluster_buckets,
-            )
-
-    return (
-        stream.writeStream.foreachBatch(land)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return maintain_pair_index(
+        stream, out_dir, checkpoint_dir, scheme, land,
+        maintain_clusters, cluster_buckets,
     )
 
 
 def simhash_pairs(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The accumulated verified near-dup pairs (a_id, b_id, hamming).
-
-    Each pair is claimed by exactly one batch; the dropDuplicates is
-    the same belt-and-braces as the siblings' readers."""
-    return (
-        spark.read.parquet(f"{out_dir}/pairs")
-        .select("a_id", "b_id", "hamming")
-        .dropDuplicates(["a_id", "b_id"])
-    )
+    """The accumulated verified near-dup pairs (a_id, b_id, hamming)."""
+    return read_pairs(spark, out_dir, "hamming")
 
 
 def lookup_near_duplicates(
@@ -258,28 +169,25 @@ def lookup_near_duplicates(
     The fingerprint scheme comes from the frozen manifest;
     ``max_hamming`` defaults to the index's and may only be LOWERED —
     the pigeonhole chunk count was sized for the frozen radius, so a
-    larger query radius would silently lose the losslessness guarantee
-    (the Jaccard twins have the same only-tighter rule).  Within the
-    frozen radius, blocking is lossless and the verify exact, so both
-    precision and recall are 1.0 (in fingerprint space)."""
+    larger query radius would silently lose the losslessness
+    guarantee.  Within the frozen radius, blocking is lossless and the
+    verify exact, so both precision and recall are 1.0 (in fingerprint
+    space)."""
     m = read_scheme(spark, out_dir, "simhash")
-    r_index = int(m["max_hamming"])
-    r = r_index if max_hamming is None else int(max_hamming)
-    if r > r_index:
-        raise ValueError(
-            f"lookup max_hamming {r} exceeds the index's frozen radius "
-            f"{r_index}: the pigeonhole chunk layout only guarantees "
-            "losslessness up to the frozen radius (rebuild the index for "
-            "a larger one)"
-        )
-    n_bits = int(m["n_bits"])
+    r = lookup_bound(
+        m, "max_hamming", max_hamming,
+        "the pigeonhole chunk layout only guarantees losslessness up to "
+        "the frozen radius",
+        radius=True,
+    )
+    r_index, n_bits = int(m["max_hamming"]), int(m["n_bits"])
     # unit scheme comes from the frozen manifest — a caller cannot
     # query with a different shingle width than the index was built at
     shingle = int(m.get("shingle") or 1)
     idx_id = m.get("id_col") or "doc_id"
     q_fps = docs.select(
         F.col(id_col),
-        simhash63(_unit(text_col, shingle), n_bits=n_bits).alias("fp"),
+        simhash63(text_unit(text_col, shingle), n_bits=n_bits).alias("fp"),
     )
     idx_fps = (
         spark.read.parquet(f"{out_dir}/fps")
@@ -291,10 +199,7 @@ def lookup_near_duplicates(
     b = _chunk_rows(idx_fps, "doc_id", "_dfp", n_bits, r_index)
     return (
         a.join(b, ["ci", "cv"])
-        .withColumn(
-            "hamming",
-            F.bit_count(F.col("_qfp").bitwiseXOR(F.col("_dfp"))).cast("int"),
-        )
+        .withColumn("hamming", _hamming("_qfp", "_dfp"))
         .filter(F.col("hamming") <= r)
         .select("q_id", "doc_id", "hamming")
         .distinct()

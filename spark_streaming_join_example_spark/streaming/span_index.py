@@ -9,8 +9,8 @@ cross-document duplicates — so "which spans recur in the corpus" and
 "how much of each document is duplicated text" are always answerable
 without re-scanning the corpus.
 
-Per micro-batch (same maintenance discipline as every sibling —
-per-batch_id idempotent overwrites, reads only ≤ this batch):
+Per micro-batch (the scheme manifest and per-batch_id overwrites of
+streaming/pair_index.py; the span index emits grams, not pairs):
 
 1. the batch's gram positions (operators/text.gram_positions) land
    under ``grams/batch_id=N``;
@@ -23,11 +23,9 @@ per-batch_id idempotent overwrites, reads only ≤ this batch):
    predecessors + itself and rewrites the same rows (idempotent under
    foreachBatch redelivery).
 
-Unique-id / write-once precondition (same as the SimHash sibling):
-claim-once assumes a doc_id is ingested exactly once across the
-stream's lifetime — re-ingesting an id would re-count its grams.
-Screen shards via :func:`lookup_span_coverage` before admission
-(demo.py §7 pattern).
+Claim-once assumes the write-once precondition of pair_index.py —
+re-ingesting an id would re-count its grams.  Screen shards via
+:func:`lookup_span_coverage` before admission (demo.py §7 pattern).
 
 Read APIs: :func:`duplicated_grams` (the accumulated duplicated-gram
 set), :func:`span_coverage` (per-document duplicated-span coverage of
@@ -54,7 +52,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.text import gram_positions, span_coverage_frame
-from .neardup_index import _verify_or_freeze_scheme, read_scheme
+from ..sources.sinks import to_foreach_batch
+from .pair_index import _verify_or_freeze_scheme, read_scheme, read_upto
 
 
 def maintain_span_index(
@@ -87,15 +86,8 @@ def maintain_span_index(
         # change doc frequency, so restrict the accumulated scan to
         # them (semi join on the gram key), then count distinct docs
         # at ≤ N and at < N in one aggregation pass
-        all_g = spark.read.parquet(f"{out_dir}/grams").filter(
-            F.col("batch_id") <= batch_id
-        )
-        new_keys = (
-            all_g.filter(F.col("batch_id") == batch_id)
-            .select("gram")
-            .distinct()
-        )
-        hist = all_g.join(new_keys, "gram", "left_semi")
+        all_g, new_g = read_upto(spark, out_dir, "grams", batch_id)
+        hist = all_g.join(new_g.select("gram").distinct(), "gram", "left_semi")
         newly_dup = (
             hist.groupBy("gram")
             .agg(
@@ -111,12 +103,7 @@ def maintain_span_index(
             f"{out_dir}/dup_grams/batch_id={batch_id}"
         )
 
-    return (
-        stream.writeStream.foreachBatch(land)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return to_foreach_batch(stream, land, checkpoint_dir)
 
 
 def grams_store(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -133,7 +120,7 @@ def duplicated_grams(spark: SparkSession, out_dir: str) -> DataFrame:
     frequency — later arrivals do not re-claim).  The per-gram MIN
     deterministically collapses the retry race where a crashed batch's
     claim landed under two batch_ids before the checkpoint settled
-    (same discipline as neardup_index.compact_pairs, r11 advisor
+    (same discipline as pair_index.compact_pairs, r11 advisor
     fix)."""
     read_scheme(spark, out_dir, "span_postings")
     return (

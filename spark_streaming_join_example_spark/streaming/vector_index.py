@@ -8,9 +8,10 @@ in-place upsert, because cell assignment must stay consistent across
 every batch ever written).  Since r9 the freeze is ENFORCED, not
 conventional: the first batch persists the centroid matrix under
 ``out_dir/_quantizer`` and every batch verifies the caller's
-centroids against it exactly (mismatch → refuse with the
-versioned-rebuild hint); ``load_quantizer`` hands restarts and
-queries the frozen matrix.  Each micro-batch then runs the linear
+centroids against it exactly — the manifest rule of
+streaming/pair_index.py, which the text indexes use for their
+schemes; ``load_quantizer`` hands restarts and queries the frozen
+matrix.  Each micro-batch then runs the linear
 cell-assignment pass against the broadcast centroids and lands under
 ``batch_id=N/cell=C/`` — idempotent per batch_id (foreachBatch is
 at-least-once; a retried batch overwrites its own subtree), and
@@ -33,6 +34,8 @@ from ..operators.similarity import (
     _deterministic_sample,
     _kmeans_centroids,
 )
+from ..sources.sinks import to_foreach_batch
+from .pair_index import read_or_none, verify_or_freeze
 
 
 def train_quantizer(corpus: DataFrame, n_cells: int = 16, seed: int = 42):
@@ -44,44 +47,6 @@ def train_quantizer(corpus: DataFrame, n_cells: int = 16, seed: int = 42):
     mat = np.array([r[0] for r in sample], dtype=np.float64)
     mat /= np.linalg.norm(mat, axis=1, keepdims=True)
     return _kmeans_centroids(mat, n_cells, seed=seed)
-
-
-def _verify_or_freeze_quantizer(
-    spark: SparkSession, out_dir: str, centroids
-) -> None:
-    """Enforce the FROZEN-quantizer discipline the module docstring
-    promises (r9, mirroring the text indexes' ``_scheme`` manifests):
-    the first batch persists the centroid matrix under
-    ``out_dir/_quantizer``; every subsequent batch verifies the
-    caller's centroids against it EXACTLY (parquet doubles round-trip
-    bit-exactly) and refuses on mismatch — restarting maintenance with
-    retrained centroids would silently assign new batches to
-    incomparable cells (reads probe the wrong partitions: false
-    negatives, not errors)."""
-    from pyspark.errors import AnalysisException
-
-    path = f"{out_dir}/_quantizer"
-    rows = [
-        (i, [float(x) for x in c]) for i, c in enumerate(centroids)
-    ]
-    try:
-        existing = spark.read.parquet(path).collect()
-    except AnalysisException:  # absent → freeze
-        spark.createDataFrame(
-            rows, "cell int, centroid array<double>"
-        ).coalesce(1).write.mode("overwrite").parquet(path)
-        return
-    found = sorted((r.cell, tuple(r.centroid)) for r in existing)
-    want = sorted((i, tuple(v)) for i, v in rows)
-    if found != want:
-        raise ValueError(
-            f"vector index at {out_dir} was built with a different "
-            f"quantizer ({len(found)} cells) than the one passed "
-            f"({len(want)} cells, or same count with different "
-            "centroids); cell assignments are not comparable across "
-            "quantizers — rebuild under a new out_dir (versioned "
-            "rebuild), or load the frozen one with load_quantizer()"
-        )
 
 
 def load_quantizer(spark: SparkSession, out_dir: str):
@@ -111,21 +76,24 @@ def maintain_vector_index(
     spark = stream.sparkSession
     bc = spark.sparkContext.broadcast(centroids)
     assigned = _assign_cells(stream, bc, 1)
+    # the frozen quantizer manifest (pair_index.verify_or_freeze):
+    # parquet doubles round-trip bit-exactly, so the check is exact
+    quantizer = [
+        {"cell": i, "centroid": [float(x) for x in c]}
+        for i, c in enumerate(centroids)
+    ]
 
     def land(batch_df: DataFrame, batch_id: int) -> None:
-        _verify_or_freeze_quantizer(batch_df.sparkSession, out_dir, centroids)
+        verify_or_freeze(
+            batch_df.sparkSession, f"{out_dir}/_quantizer", quantizer, "parquet"
+        )
         (
             batch_df.write.mode("overwrite")
             .partitionBy("cell")
             .parquet(f"{out_dir}/batch_id={batch_id}")
         )
 
-    return (
-        assigned.writeStream.foreachBatch(land)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return to_foreach_batch(assigned, land, checkpoint_dir)
 
 
 def compact_index(
@@ -149,8 +117,6 @@ def compact_index(
     One hash exchange on cell puts each cell's rows in exactly one
     write task → exactly one file per cell; at 100 TB shard hot cells
     instead by repartitioning on (cell, pmod(vec_id, shards))."""
-    from pyspark.errors import AnalysisException
-
     idx = spark.read.parquet(index_dir).select("vec_id", "cell", "embedding")
     n = spark.sparkContext.defaultParallelism
     (
@@ -162,15 +128,9 @@ def compact_index(
     # the compacted snapshot is self-contained: carry the frozen
     # quantizer along so load_quantizer/knn_query_index work against
     # either directory (older indexes without a manifest stay readable)
-    try:
-        (
-            spark.read.parquet(f"{index_dir}/_quantizer")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{out_dir}/_quantizer")
-        )
-    except AnalysisException:
-        pass
+    frozen = read_or_none(spark, f"{index_dir}/_quantizer")
+    if frozen is not None:
+        frozen.coalesce(1).write.mode("overwrite").parquet(f"{out_dir}/_quantizer")
 
 
 def knn_query_index(

@@ -121,3 +121,35 @@ def test_no_edge_cardinality_broadcast_markers():
             if pat.search(line) and "# bounded:" not in line:
                 offenders.append(f"{path.name}:{i}: {line.strip()}")
     assert not offenders, offenders
+
+
+def test_streaming_indexes_share_one_batch_protocol():
+    """The streaming indexes run one foreachBatch protocol
+    (streaming/pair_index.py).  Two rules keep copies from growing back:
+    only the shared missing-path helper may catch AnalysisException
+    (a broader catch re-freezes a manifest it could not read), and no
+    index module starts its own writeStream chain."""
+    streaming = PKG / "streaming"
+    offenders = []
+    for path in sorted(streaming.glob("*.py")):
+        tree = ast.parse(path.read_text())
+        owner = {}  # node -> name of its innermost enclosing function
+        for fn in ast.walk(tree):
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                for node in ast.walk(fn):
+                    owner[node] = fn.name  # inner defs are walked later
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.ExceptHandler)
+                and node.type is not None
+                and "AnalysisException" in ast.unparse(node.type)
+                and (path.name, owner.get(node)) != ("pair_index.py", "read_or_none")
+            ):
+                offenders.append(f"{path.name}:{node.lineno}: except AnalysisException")
+            if (
+                path.name.endswith("_index.py")
+                and isinstance(node, ast.Attribute)
+                and node.attr == "writeStream"
+            ):
+                offenders.append(f"{path.name}:{node.lineno}: .writeStream")
+    assert not offenders, offenders

@@ -596,3 +596,25 @@ def test_scan_fanout_treats_unknown_size_as_noop(spark, sf_dir, monkeypatch):
     monkeypatch.setattr(B.os.path, "isdir", lambda p: True)
     monkeypatch.setattr(B.glob, "glob", lambda *a, **k: [])
     assert B.scan_fanout(base, sf_dir, "documents") is base
+
+
+def test_ensure_runtime_confs_logs_unsettable_conf(spark, monkeypatch, caplog):
+    """A conf the session refuses (a static conf, here) is logged once
+    per key instead of being swallowed silently."""
+    import logging
+
+    from spark_streaming_join_example_spark import session
+
+    monkeypatch.setattr(
+        session, "RUNTIME_CONFS", {"spark.sql.warehouse.dir": "elsewhere-warehouse"}
+    )
+    monkeypatch.setattr(session, "_unsettable", set())
+    with caplog.at_level(logging.WARNING, logger=session.__name__):
+        session.ensure_runtime_confs(spark)
+        session.ensure_runtime_confs(spark)
+    hits = [
+        r for r in caplog.records
+        if r.name == session.__name__ and "spark.sql.warehouse.dir" in r.getMessage()
+    ]
+    assert len(hits) == 1
+    assert spark.conf.get("spark.sql.warehouse.dir") != "elsewhere-warehouse"

@@ -2156,6 +2156,30 @@ def test_vector_index_quantizer_freeze(spark, sf_dir, tmp_path):
     start("ck3", frozen).awaitTermination()
 
 
+def test_corrupt_quantizer_dir_is_not_silently_refrozen(spark, sf_dir, tmp_path):
+    """Twin of the text indexes' corrupt-_scheme pin: only a MISSING
+    quantizer manifest may take the freeze branch.  A present-but-empty
+    ``_quantizer`` dir (a crashed first write) must fail the query and
+    stay untouched, not be overwritten with the caller's centroids."""
+    from spark_streaming_join_example_spark.streaming.vector_index import (
+        maintain_vector_index,
+        train_quantizer,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    cent = train_quantizer(emb, n_cells=4)
+    replay = tmp_path / "replay"
+    emb.filter(F.col("vec_id") < 50).write.mode("overwrite").parquet(str(replay))
+    idx = tmp_path / "idx"
+    qdir = idx / "_quantizer"
+    os.makedirs(qdir)
+    stream = spark.readStream.schema(emb.schema).parquet(str(replay))
+    q = maintain_vector_index(stream, cent, str(idx), str(tmp_path / "ck"))
+    with pytest.raises(Exception, match="UNABLE_TO_INFER_SCHEMA"):
+        q.awaitTermination()
+    assert os.listdir(qdir) == []
+
+
 def test_threshold_crossings_with_state_matches_batch(
     spark, sf_dir, replay_dir, tmp_path
 ):
